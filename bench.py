@@ -3,17 +3,14 @@
 size scaling proxy (north rule: N vs 4N executors, driver instruction:
 "e.g. local[8] and local[32], or N and 4N cores").
 
-The scaling pair is **local[4] vs local[16]**: the box has 16 PHYSICAL
-cores with SMT-2 exposed as 32 logical CPUs, so 16 threads is the largest
-level at which threads do not share SMT ports — the faithful proxy for a
-cluster of independent executors (which never share a core).  8→32
-numbers are kept in BENCH.md for history: they measure the SMT +
-shared-memory-bandwidth wall of one box, not the plan's scalability.
-Headline throughput is still reported at local[32] (use all silicon).
+The scaling pair is **local[SCALE_LO] vs local[SCALE_HI]**, 2 vs 8 by
+default (``BENCH_SCALE_LO`` / ``BENCH_SCALE_HI``; the reason for the pair
+is at their definition).  Headline throughput is reported at
+local[CPUS] (``SPARK_GRAFT_CPUS``, default 32).
 
 Prints ONE JSON line:
-  {"metric": "urls_fetched_updated_per_sec", "value": <wall sec of the
-   headline cycle at local[CPUS]>, "unit": "sec", "queries": {...}, "sf": ...,
+  {"metric": "crawl_cycle_sec", "value": <wall sec of the headline
+   cycle at local[CPUS]>, "unit": "sec", "queries": {...}, "sf": ...,
    "throughput": {...}, "scaling": {...}}
 
 Input synthesis is deterministic (seed 42), entirely JVM-side (spark.range
@@ -597,7 +594,7 @@ def main() -> None:
     # before this process's own micro/headline load warms the box and
     # before the round's close-out window, when the shared VM is
     # historically busiest ---
-    # same cycle at local[4] vs local[16].
+    # same cycle at local[SCALE_LO] vs local[SCALE_HI].
     # The host VM shows heavy CPU-steal windows (identical runs swing up
     # to 6x), so reps are INTERLEAVED across parallelism levels — a
     # throttle window hits both levels, not just one — and each level

@@ -6,6 +6,11 @@ longs throughout; we preserve that for bit-exact schedule parity —
 SURVEY.md §2.8 C8).  "now" is never read from the wall clock inside an
 operator: the cycle driver injects ``cur_time`` exactly as the reference
 does via ``generate.curTime`` / ``injector.current.time``.
+
+``use_url_seen`` is the URL-seen index's only switch.  The index is always
+per-host-bucket bloom shards, and the crawl driver picks the probe route
+(broadcast or bucket cogroup) from the frontier size it already records
+(``plans.cycle.URL_SEEN_BROADCAST_MAX_BYTES``).
 """
 
 from __future__ import annotations
@@ -57,24 +62,11 @@ class CrawlConfig:
     # generate._with_host_attrs); turn off when the host universe itself
     # is too large to broadcast (falls back to per-row pandas UDFs)
     host_attrs_broadcast: bool = True
-    # URL-seen bloom pre-filter in the cycle (north rule): with additions
-    # disallowed, definitely-new link targets are dropped BEFORE the
-    # updatedb shuffle (sharded per-host-bucket blooms, built once —
-    # the frontier key-set is frozen when additions are off)
+    # URL-seen bloom pre-filter in the cycle (north rule): per-host-bucket
+    # bloom shards (functions.hashing.build_bloom_sharded).  additions-off
+    # drops definitely-new link targets BEFORE the updatedb shuffle;
+    # additions-on sends them down the direct new-row path instead
     use_url_seen: bool = False
-    # membership structure for the URL-seen shards (north rule
-    # "bloom/cuckoo"): 'bloom' (~1.2 B/url, fpp 1%) or 'cuckoo'
-    # (~4 B/url, fpp ≤0.012% and in-place deletion — see
-    # functions/hashing.CuckooFilter).  Shards on disk self-describe;
-    # switching backend mid-crawl triggers a one-time full shard rebuild
-    url_seen_backend: str = "bloom"
-    # size gate for the URL-seen probe's broadcast route: when the
-    # frontier-size estimate prices the WHOLE shard table under this many
-    # bytes (~1.2 B/url at 1% fpp), the probe broadcasts the shards and
-    # runs shuffle-free (functions.hashing.bloom_contains_broadcast);
-    # past it — ~10^8 urls at the default — the bucket-cogroup path keeps
-    # each shard on its own bucket's wire (guide §3.1 sizing discipline)
-    url_seen_broadcast_max_bytes: int = 128 << 20
     # broadcast the fetchlist-sized small sides (generate selection,
     # updatedb delta, dedup phash) so the frontier never shuffles full
     # rows — use when topN/fetchlist fits a broadcast; with an Iceberg

@@ -19,10 +19,14 @@ from pandas UDFs.
 The Bloom filter is the URL-seen pre-filter from the north rule: PySpark has
 no public Bloom builder, so we build a double-hashing Bloom (Kirsch-
 Mitzenmacher: g_i = h1 + i*h2 mod m) from two xxhash64 columns computed
-JVM-side, OR-ing per-partition bitmaps on the driver, and broadcast the bit
-array for membership tests inside a pandas UDF.  False positives are safe:
-"maybe-seen" URLs still flow through the exact full-outer updatedb join
-(SURVEY.md §2.3); only definite-new rows may short-circuit.
+JVM-side.  It is one structure, sharded per bucket and never collected at
+build time (:func:`build_bloom_sharded`), with two probe routes that give
+the same answer: broadcast the whole shard table
+(:func:`bloom_contains_broadcast`) or cogroup each probe bucket with its
+shard (:func:`bloom_contains_sharded`); the caller picks by
+:func:`shard_table_bytes`.  False positives are safe: "maybe-seen" URLs
+still flow through the exact full-outer updatedb join (SURVEY.md §2.3);
+only definite-new rows may short-circuit.
 """
 
 from __future__ import annotations
@@ -33,6 +37,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
 
 _POW31_CACHE: dict[int, np.ndarray] = {}
 
@@ -149,6 +154,10 @@ def md5_long60(col, seed: int | None = None):
 # Bloom filter (URL-seen pre-filter, north rule)
 # ---------------------------------------------------------------------------
 
+# seed of the second xxhash64 (h2) for double hashing; h1 is the unseeded
+# xxhash64.  Shards on disk and every prober depend on both.
+_H2_SEED = 0x9E3779B9
+
 
 class BloomFilter:
     """Double-hashing Bloom over two 64-bit hashes (Kirsch-Mitzenmacher)."""
@@ -182,61 +191,38 @@ class BloomFilter:
         bit = (word >> (pos % np.uint64(64))) & np.uint64(1)
         return bit.all(axis=1).astype(bool)
 
-    def merge(self, other: "BloomFilter") -> "BloomFilter":
-        assert self.m == other.m and self.k == other.k
-        self.bits |= other.bits
-        return self
+
+def _u64(s: pd.Series) -> np.ndarray:
+    """A Spark ``long`` hash column as the uint64 the filter indexes by."""
+    return s.to_numpy().astype(np.int64).view(np.uint64)
 
 
-def _with_hashes(df: DataFrame, col: str) -> DataFrame:
-    # xxhash64 is JVM-side (whole-stage codegen); two independent seeds give
-    # the (h1, h2) pair for double hashing.
-    return df.select(
+def _hash_cols(col: str, n_buckets: int, bucket_expr, bucket_col: str):
+    """The shard bucket and the (h1, h2) pair of ``col``, all JVM-side.
+    ``bucket_expr`` defaults to ``pmod(xxhash64(col), n_buckets)``."""
+    if bucket_expr is None:
+        bucket_expr = F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
+    return [
+        bucket_expr.alias(bucket_col),
         F.xxhash64(F.col(col)).cast("long").alias("_h1"),
-        F.xxhash64(F.col(col), F.lit(0x9E3779B9)).cast("long").alias("_h2"),
-    )
+        F.xxhash64(F.col(col), F.lit(_H2_SEED)).cast("long").alias("_h2"),
+    ]
 
 
-def build_bloom_local(df: DataFrame, col: str, capacity: int,
-                      fpp: float = 0.01,
-                      max_capacity: int = 50_000_000) -> BloomFilter:
-    """Small-frontier Bloom build: per-partition numpy bitmaps OR-reduced
-    on the DRIVER — a driver-memory object, not a scale path.
+def _shard_params(capacity: int, n_buckets: int,
+                  fpp: float = 0.01) -> tuple[int, int]:
+    """(m, k) of every shard: ``capacity`` split evenly over the buckets,
+    with a floor so a small crawl still gets a usable filter."""
+    return BloomFilter.params(max(capacity // n_buckets, 1024), fpp)
 
-    Deliberately capacity-guarded (VERDICT r3 #9): at 10^10 rows the
-    1%-fpp bitmap is ~12 GB of driver heap, so the monolithic form must
-    be unreachable from driver code at scale — :func:`build_bloom_sharded`
-    is the single production API (one shard per host-bucket, built where
-    the data lives, never collected).  This helper remains for tests and
-    genuinely small frontiers only.
-    """
-    if capacity > max_capacity:
-        raise ValueError(
-            f"build_bloom_local: capacity {capacity:,} exceeds the "
-            f"driver-bitmap guard ({max_capacity:,}); use "
-            "build_bloom_sharded — the monolithic bitmap would need "
-            f"~{BloomFilter.params(capacity, fpp)[0] // (8 * 1 << 30)} GiB "
-            "of driver heap"
-        )
-    m, k = BloomFilter.params(capacity, fpp)
 
-    def partition_bitmap(it):
-        bf = BloomFilter(m, k)
-        for pdf in it:
-            h1 = pdf["_h1"].to_numpy().astype(np.int64).view(np.uint64)
-            h2 = pdf["_h2"].to_numpy().astype(np.int64).view(np.uint64)
-            bf.add(h1, h2)
-        yield pd.DataFrame({"bits": [bf.bits.tobytes()]})
-
-    parts = (
-        _with_hashes(df, col)
-        .mapInPandas(partition_bitmap, schema="bits binary")
-        .collect()
-    )
-    out = BloomFilter(m, k)
-    for row in parts:
-        out.bits |= np.frombuffer(row["bits"], dtype=np.uint64)
-    return out
+def shard_table_bytes(capacity: int, n_buckets: int) -> int:
+    """Bytes of bitmap in a full shard table that
+    :func:`build_bloom_sharded` builds for ``capacity`` urls at its
+    default 1% fpp — about 1.2 B/url.  Computed without a Spark job, so a
+    caller can pick the probe route before touching the shards."""
+    m, _ = _shard_params(capacity, n_buckets)
+    return (m // 8) * n_buckets
 
 
 def build_bloom_sharded(df: DataFrame, col: str, capacity: int,
@@ -244,30 +230,22 @@ def build_bloom_sharded(df: DataFrame, col: str, capacity: int,
                         bucket_expr=None) -> DataFrame:
     """Sharded Bloom build: one bitmap per bucket, NEVER driver-collected.
 
-    Returns a DataFrame ``(bucket int, m long, k int, bits binary)`` — the
-    10^10-scale shape the monolithic :func:`build_bloom_local` can't reach (a
-    single 1%-fpp filter over 10^10 URLs is ~12 GB on the driver; 256
-    host-bucket shards are ~47 MB each, built where the data lives and
-    only ever co-shuffled with their own bucket's probes).
+    Returns a DataFrame ``(bucket int, m long, k int, bits binary)``.  A
+    single 1%-fpp filter over 10^10 URLs would be ~12 GB on the driver;
+    256 host-bucket shards are ~47 MB each, built where the data lives.
+    Every shard gets the same ``m`` (see :func:`_shard_params`), so two
+    builds at one capacity can be OR-ed shard by shard.
 
     ``bucket_expr`` defaults to ``pmod(xxhash64(col), n_buckets)`` — pass
     the frontier's host-bucket expression to align shards with the crawl's
-    bucket layout (seen.py).
+    bucket layout.
     """
-    if bucket_expr is None:
-        bucket_expr = F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
-    m, k = BloomFilter.params(max(capacity // n_buckets, 1024), fpp)
-
-    hashed = df.select(
-        bucket_expr.alias("bucket"),
-        F.xxhash64(F.col(col)).cast("long").alias("_h1"),
-        F.xxhash64(F.col(col), F.lit(0x9E3779B9)).cast("long").alias("_h2"),
-    )
+    m, k = _shard_params(capacity, n_buckets, fpp)
+    hashed = df.select(*_hash_cols(col, n_buckets, bucket_expr, "bucket"))
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         bf = BloomFilter(m, k)
-        bf.add(pdf["_h1"].to_numpy().astype(np.int64).view(np.uint64),
-               pdf["_h2"].to_numpy().astype(np.int64).view(np.uint64))
+        bf.add(_u64(pdf["_h1"]), _u64(pdf["_h2"]))
         return pd.DataFrame({
             "bucket": [int(pdf["bucket"].iloc[0])],
             "m": [m], "k": [k], "bits": [bf.bits.tobytes()],
@@ -278,6 +256,20 @@ def build_bloom_sharded(df: DataFrame, col: str, capacity: int,
     )
 
 
+def _probe_input(probe: DataFrame, col: str, out_col: str, n_buckets: int,
+                 bucket_expr):
+    """What both probe routes share: the hashed probe frame (bucket in
+    ``_bkt``), the output schema (probe columns + boolean ``out_col``) and
+    the probe column names to keep."""
+    # fresh StructType — StructType.add MUTATES the frame's cached schema
+    out_schema = StructType(
+        list(probe.schema.fields) + [StructField(out_col, BooleanType())]
+    )
+    hashed = probe.select(
+        "*", *_hash_cols(col, n_buckets, bucket_expr, "_bkt"))
+    return hashed, out_schema, probe.columns
+
+
 def bloom_contains_sharded(probe: DataFrame, col: str, blooms: DataFrame,
                            out_col: str = "maybe_seen",
                            n_buckets: int = 256,
@@ -286,29 +278,15 @@ def bloom_contains_sharded(probe: DataFrame, col: str, blooms: DataFrame,
     shard's bitmap crosses the wire once per bucket-group, not per row.
     Probes whose bucket has no shard (nothing ever inserted) are
     definitely-new → False."""
-    if bucket_expr is None:
-        bucket_expr = F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
-    p = probe.withColumn("_bkt", bucket_expr).withColumn(
-        "_h1", F.xxhash64(F.col(col)).cast("long")
-    ).withColumn("_h2", F.xxhash64(F.col(col), F.lit(0x9E3779B9)).cast("long"))
-
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    # fresh StructType — StructType.add MUTATES the frame's cached schema
-    out_schema = StructType(
-        list(probe.schema.fields) + [StructField(out_col, BooleanType())]
-    )
-    probe_cols = probe.columns
+    p, out_schema, probe_cols = _probe_input(probe, col, out_col, n_buckets,
+                                             bucket_expr)
 
     def check(pl: pd.DataFrame, bl: pd.DataFrame) -> pd.DataFrame:
         out = pl[probe_cols].copy()
         if len(bl):
             bf = BloomFilter(int(bl["m"].iloc[0]), int(bl["k"].iloc[0]),
                              np.frombuffer(bl["bits"].iloc[0], dtype=np.uint64))
-            out[out_col] = bf.contains(
-                pl["_h1"].to_numpy().astype(np.int64).view(np.uint64),
-                pl["_h2"].to_numpy().astype(np.int64).view(np.uint64),
-            )
+            out[out_col] = bf.contains(_u64(pl["_h1"]), _u64(pl["_h2"]))
         else:
             out[out_col] = False
         return out
@@ -324,45 +302,29 @@ def bloom_contains_broadcast(probe: DataFrame, col: str, blooms: DataFrame,
                              out_col: str = "maybe_seen",
                              n_buckets: int = 256,
                              bucket_expr=None) -> DataFrame:
-    """Broadcast twin of :func:`bloom_contains_sharded` for frontiers whose
-    TOTAL shard bytes fit executor memory: the shard table is collected
-    once and broadcast, and the probe becomes a shuffle-free
-    ``mapInPandas`` — the probe side never enters an Exchange and the
-    cogroup's per-bucket repartition disappears (guide §3.1: broadcast
-    the side that fits).  Same results bit-for-bit: probes whose bucket
-    has no shard are definitely-new → False.
+    """Broadcast twin of :func:`bloom_contains_sharded` for shard tables
+    that fit executor memory: the shard table is collected once and
+    broadcast, and the probe becomes a shuffle-free ``mapInPandas`` — the
+    probe side never enters an Exchange (guide §3.1: broadcast the side
+    that fits).  Same results bit-for-bit: probes whose bucket has no
+    shard are definitely-new → False.
 
-    Callers are responsible for the size gate (the crawl driver routes on
-    the frontier-size estimate — ~1.2 GB of shards per 10^9 URLs at 1%
-    fpp — and falls back to the cogroup path past
-    ``url_seen_broadcast_max_bytes``)."""
-    if bucket_expr is None:
-        bucket_expr = F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
+    Callers own the size gate: price the table with
+    :func:`shard_table_bytes` and take the cogroup route past it."""
     shard_rows = blooms.select("bucket", "m", "k", "bits").collect()
     filters = {int(r["bucket"]): (int(r["m"]), int(r["k"]), r["bits"])
                for r in shard_rows}
     bc = probe.sparkSession.sparkContext.broadcast(filters)
-
-    p = probe.withColumn("_bkt", bucket_expr).withColumn(
-        "_h1", F.xxhash64(F.col(col)).cast("long")
-    ).withColumn("_h2", F.xxhash64(F.col(col), F.lit(0x9E3779B9)).cast("long"))
-
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    out_schema = StructType(
-        list(probe.schema.fields) + [StructField(out_col, BooleanType())]
-    )
-    probe_cols = probe.columns
+    p, out_schema, probe_cols = _probe_input(probe, col, out_col, n_buckets,
+                                             bucket_expr)
 
     def check(it):
         fl = bc.value
         built: dict[int, BloomFilter] = {}
         for pdf in it:
-            n = len(pdf)
-            res = np.zeros(n, dtype=bool)
+            res = np.zeros(len(pdf), dtype=bool)
             bkt = pdf["_bkt"].to_numpy()
-            h1 = pdf["_h1"].to_numpy().astype(np.int64).view(np.uint64)
-            h2 = pdf["_h2"].to_numpy().astype(np.int64).view(np.uint64)
+            h1, h2 = _u64(pdf["_h1"]), _u64(pdf["_h2"])
             for b in np.unique(bkt):
                 ent = fl.get(int(b))
                 if ent is None:
@@ -379,296 +341,3 @@ def bloom_contains_broadcast(probe: DataFrame, col: str, blooms: DataFrame,
             yield out
 
     return p.mapInPandas(check, schema=out_schema)
-
-
-def bloom_contains_col(spark, df: DataFrame, col: str, bloom: BloomFilter,
-                       out_col: str = "maybe_seen") -> DataFrame:
-    """Append a boolean column: True if ``col`` is possibly in the filter."""
-    bc = spark.sparkContext.broadcast((bloom.m, bloom.k, bloom.bits))
-
-    def check(it):
-        m, k, bits = bc.value
-        bf = BloomFilter(m, k, bits)
-        for pdf in it:
-            h1 = pdf["_h1"].to_numpy().astype(np.int64).view(np.uint64)
-            h2 = pdf["_h2"].to_numpy().astype(np.int64).view(np.uint64)
-            pdf = pdf.drop(columns=["_h1", "_h2"])
-            pdf[out_col] = bf.contains(h1, h2)
-            yield pdf
-
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    # fresh StructType — StructType.add MUTATES the frame's cached schema
-    schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, BooleanType())]
-    )
-    return (
-        df.withColumn("_h1", F.xxhash64(F.col(col)).cast("long"))
-        .withColumn("_h2", F.xxhash64(F.col(col), F.lit(0x9E3779B9)).cast("long"))
-        .mapInPandas(check, schema=schema)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Cuckoo filter (URL-seen pre-filter with DELETION, north rule's second
-# membership structure) — Fan et al., "Cuckoo Filter: Practically Better
-# Than Bloom", CoNEXT'14
-# ---------------------------------------------------------------------------
-
-
-class CuckooFilter:
-    """Bucketized cuckoo filter: ``nb`` (power-of-two) buckets × 4 slots
-    of 16-bit fingerprints; an item lives in one of two candidate buckets
-    ``i1 = h1 mod nb`` and ``i2 = i1 XOR mix(fp)`` (partial-key cuckoo
-    hashing — the XOR form is an involution, so either copy can find its
-    alternate without the original key).
-
-    Why it exists next to :class:`BloomFilter`: it supports **delete** —
-    a bloom can never un-see a URL, so frontier purges (CrawlDbFilter,
-    gone-expiry) force a full shard rebuild; the cuckoo shard removes the
-    purged fingerprints in place.  Cost: ~4 bytes/item at the 0.5 load
-    factor used here vs ~1.2 for a 1% bloom — bought back by a far lower
-    fpp (≤ 2·4/2^16 ≈ 0.012%).
-
-    Deletion caveat (inherent to the structure): only delete items that
-    were actually inserted.  Deleting a never-inserted URL that collides
-    with another's (bucket, fingerprint) would remove the OTHER item's
-    copy — when both were inserted each holds its own slot, so
-    inserted-item deletes are always safe.
-
-    The bulk ``add`` is vectorized two-choice placement (semi-sort by
-    bucket, rank-vs-free-slots, one scatter per round); only the residue
-    that misses both candidate buckets (rare at load ≤ 0.5) walks the
-    classic per-item eviction loop, with a DETERMINISTIC kick-slot
-    (kick mod 4) so builds are reproducible."""
-
-    __slots__ = ("nb", "table")
-    SLOTS = 4
-
-    def __init__(self, nb: int, table: np.ndarray | None = None):
-        assert nb & (nb - 1) == 0, "nb must be a power of two"
-        self.nb = nb
-        self.table = table if table is not None else \
-            np.zeros((nb, self.SLOTS), dtype=np.uint16)
-
-    @staticmethod
-    def params(capacity: int, load: float = 0.5) -> int:
-        nb = 64
-        while nb * CuckooFilter.SLOTS * load < capacity:
-            nb <<= 1
-        return nb
-
-    # -- hashing -----------------------------------------------------------
-    def _fph(self, fp: np.ndarray) -> np.ndarray:
-        h = fp.astype(np.uint64) * np.uint64(0x5BD1E995)
-        h ^= h >> np.uint64(13)
-        return h & np.uint64(self.nb - 1)
-
-    def _derive(self, h1: np.ndarray, h2: np.ndarray):
-        fp = ((h2 % np.uint64(0xFFFF)) + np.uint64(1)).astype(np.uint16)
-        i1 = (h1 & np.uint64(self.nb - 1)).astype(np.int64)
-        i2 = (i1.view(np.uint64) ^ self._fph(fp)).astype(np.int64)
-        return fp, i1, i2
-
-    # -- bulk insert -------------------------------------------------------
-    def _bulk_place(self, b: np.ndarray, fp: np.ndarray) -> np.ndarray:
-        """Place as many (bucket, fp) pairs as fit in their buckets' free
-        slots; returns the placed mask (input order)."""
-        placed = np.zeros(len(b), dtype=bool)
-        if not len(b):
-            return placed
-        order = np.argsort(b, kind="stable")
-        bs, fps = b[order], fp[order]
-        uniq, starts, counts = np.unique(bs, return_index=True,
-                                         return_counts=True)
-        rank = np.arange(len(bs)) - np.repeat(starts, counts)
-        free = self.table[uniq] == 0                       # (u, 4)
-        fits = rank < np.repeat(free.sum(1), counts)
-        slot_order = np.argsort(~free, axis=1, kind="stable")
-        urep = np.repeat(np.arange(len(uniq)), counts)
-        slots = slot_order[urep, np.minimum(rank, self.SLOTS - 1)]
-        self.table[bs[fits], slots[fits]] = fps[fits]
-        placed[order] = fits
-        return placed
-
-    def _insert_evict(self, b: int, f: int, max_kicks: int = 500) -> None:
-        cur_b, cur_f = int(b), int(f)
-        for kick in range(max_kicks):
-            row = self.table[cur_b]
-            empty = np.flatnonzero(row == 0)
-            if len(empty):
-                self.table[cur_b, empty[0]] = cur_f
-                return
-            s = kick % self.SLOTS
-            cur_f, displaced = int(row[s]), cur_f
-            self.table[cur_b, s] = displaced
-            cur_b = int(np.uint64(cur_b)
-                        ^ self._fph(np.array([cur_f], dtype=np.uint16))[0])
-        raise RuntimeError(
-            "CuckooFilter over capacity: eviction walk exceeded "
-            f"{max_kicks} kicks — size with params(capacity) (load 0.5)")
-
-    def add(self, h1: np.ndarray, h2: np.ndarray) -> None:
-        pairs = np.unique(np.stack([h1, h2], axis=1), axis=0)  # re-adds
-        fp, i1, i2 = self._derive(pairs[:, 0], pairs[:, 1])    # are free
-        pend = ~self._bulk_place(i1, fp)
-        if pend.any():
-            sub = np.flatnonzero(pend)
-            done = self._bulk_place(i2[sub], fp[sub])
-            pend[sub[done]] = False
-        for j in np.flatnonzero(pend):
-            self._insert_evict(i1[j], int(fp[j]))
-
-    # -- queries -----------------------------------------------------------
-    def contains(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        fp, i1, i2 = self._derive(h1, h2)
-        return ((self.table[i1] == fp[:, None]).any(1)
-                | (self.table[i2] == fp[:, None]).any(1))
-
-    def delete(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        """Remove ONE stored copy per distinct (h1, h2); returns the
-        removed mask over the deduped pairs.  Per-item loop — purge sets
-        are a small fraction of a cycle by construction."""
-        pairs = np.unique(np.stack([h1, h2], axis=1), axis=0)
-        fp, i1, i2 = self._derive(pairs[:, 0], pairs[:, 1])
-        removed = np.zeros(len(pairs), dtype=bool)
-        for j in range(len(pairs)):
-            for b in (i1[j], i2[j]):
-                s = np.flatnonzero(self.table[b] == fp[j])
-                if len(s):
-                    self.table[b, s[0]] = 0
-                    removed[j] = True
-                    break
-        return removed
-
-
-def _cuckoo_hashed(df: DataFrame, col: str, n_buckets: int, bucket_expr):
-    if bucket_expr is None:
-        bucket_expr = F.pmod(F.xxhash64(F.col(col)),
-                             F.lit(n_buckets)).cast("int")
-    return df.select(
-        bucket_expr.alias("bucket"),
-        F.xxhash64(F.col(col)).cast("long").alias("_h1"),
-        F.xxhash64(F.col(col), F.lit(0x9E3779B9)).cast("long").alias("_h2"),
-    )
-
-
-def build_cuckoo_sharded(df: DataFrame, col: str, capacity: int,
-                         n_buckets: int = 256,
-                         bucket_expr=None) -> DataFrame:
-    """Sharded cuckoo build, mirror of :func:`build_bloom_sharded`:
-    one filter per host-bucket, built where the data lives, never
-    driver-collected.  Returns ``(bucket int, nb long, table binary)``.
-
-    Sizing is **per shard, from the shard's own row count**: buckets are
-    host-aligned and skewed, so a global ``capacity // n_buckets`` split
-    under-sizes a hot bucket (a >2x-average bucket exhausts the eviction
-    walk and fails the whole refresh job, where the bloom backend only
-    degrades its fpp).  Shards never receive adds after build (only
-    in-place deletes), so ``len(pdf)`` at load 0.5 is exact — and the
-    shard schema carries ``nb`` per row, making heterogeneous shard
-    sizes free.  ``capacity // n_buckets`` survives only as a floor so
-    today's small bucket still leaves headroom against tomorrow's rows
-    landing in an untouched-refresh window; a doubled-``nb`` retry backs
-    the rare adversarial fingerprint-collision residue."""
-    floor = max(capacity // n_buckets, 1024)
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        nb = CuckooFilter.params(max(len(pdf), floor))
-        h1 = pdf["_h1"].to_numpy().astype(np.int64).view(np.uint64)
-        h2 = pdf["_h2"].to_numpy().astype(np.int64).view(np.uint64)
-        for attempt in range(4):
-            try:
-                cf = CuckooFilter(nb)
-                cf.add(h1, h2)
-                break
-            except RuntimeError:
-                if attempt == 3:
-                    raise
-                nb <<= 1
-        return pd.DataFrame({
-            "bucket": [int(pdf["bucket"].iloc[0])],
-            "nb": [nb], "table": [cf.table.tobytes()],
-        })
-
-    return _cuckoo_hashed(df, col, n_buckets, bucket_expr) \
-        .groupBy("bucket") \
-        .applyInPandas(build, schema="bucket int, nb long, table binary")
-
-
-def cuckoo_contains_sharded(probe: DataFrame, col: str, filters: DataFrame,
-                            out_col: str = "maybe_seen",
-                            n_buckets: int = 256,
-                            bucket_expr=None) -> DataFrame:
-    """Membership against sharded cuckoo filters — same cogroup shape as
-    :func:`bloom_contains_sharded` (one shard crosses the wire per bucket
-    group; bucket with no shard → definitely new)."""
-    if bucket_expr is None:
-        bucket_expr = F.pmod(F.xxhash64(F.col(col)),
-                             F.lit(n_buckets)).cast("int")
-    p = probe.withColumn("_bkt", bucket_expr).withColumn(
-        "_h1", F.xxhash64(F.col(col)).cast("long")
-    ).withColumn("_h2", F.xxhash64(F.col(col), F.lit(0x9E3779B9)).cast("long"))
-
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    out_schema = StructType(
-        list(probe.schema.fields) + [StructField(out_col, BooleanType())]
-    )
-    probe_cols = probe.columns
-
-    def check(pl: pd.DataFrame, fl: pd.DataFrame) -> pd.DataFrame:
-        out = pl[probe_cols].copy()
-        if len(fl):
-            cf = CuckooFilter(
-                int(fl["nb"].iloc[0]),
-                np.frombuffer(fl["table"].iloc[0], dtype=np.uint16)
-                .reshape(-1, CuckooFilter.SLOTS).copy())
-            out[out_col] = cf.contains(
-                pl["_h1"].to_numpy().astype(np.int64).view(np.uint64),
-                pl["_h2"].to_numpy().astype(np.int64).view(np.uint64))
-        else:
-            out[out_col] = False
-        return out
-
-    return (
-        p.groupBy("_bkt")
-        .cogroup(filters.groupBy("bucket"))
-        .applyInPandas(check, schema=out_schema)
-    )
-
-
-def cuckoo_delete_sharded(filters: DataFrame, deletes: DataFrame, col: str,
-                          n_buckets: int = 256,
-                          bucket_expr=None) -> DataFrame:
-    """Delete the ``deletes[col]`` fingerprints from sharded cuckoo
-    filters — the operation a bloom cannot do (frontier purges would
-    otherwise force a full shard rebuild).  Cogroup by bucket: shards
-    with no deletes pass through untouched; each touched shard removes
-    its purged fingerprints in place.  Returns the NEW filters frame
-    (same schema); the caller swaps + unpersists, snapshot-style."""
-    d = _cuckoo_hashed(deletes, col, n_buckets, bucket_expr) \
-        .withColumnRenamed("bucket", "_bkt")
-
-    def apply_deletes(fl: pd.DataFrame, dl: pd.DataFrame) -> pd.DataFrame:
-        if not len(fl):
-            return pd.DataFrame({"bucket": pd.Series([], dtype="int32"),
-                                 "nb": pd.Series([], dtype="int64"),
-                                 "table": pd.Series([], dtype=object)})
-        if not len(dl):
-            return fl[["bucket", "nb", "table"]]
-        cf = CuckooFilter(
-            int(fl["nb"].iloc[0]),
-            np.frombuffer(fl["table"].iloc[0], dtype=np.uint16)
-            .reshape(-1, CuckooFilter.SLOTS).copy())
-        cf.delete(dl["_h1"].to_numpy().astype(np.int64).view(np.uint64),
-                  dl["_h2"].to_numpy().astype(np.int64).view(np.uint64))
-        return pd.DataFrame({"bucket": fl["bucket"].iloc[:1],
-                             "nb": fl["nb"].iloc[:1],
-                             "table": [cf.table.tobytes()]})
-
-    return (
-        filters.groupBy("bucket")
-        .cogroup(d.groupBy("_bkt"))
-        .applyInPandas(apply_deletes, schema="bucket int, nb long, table binary")
-    )

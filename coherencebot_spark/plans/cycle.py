@@ -32,6 +32,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import CrawlConfig, DEFAULT
+from ..functions.hashing import (bloom_contains_broadcast,
+                                 bloom_contains_sharded, build_bloom_sharded,
+                                 shard_table_bytes)
 from ..operators.dedup import dedup as dedup_job, dedup_by_phash
 from ..operators.fetch import fetch
 from ..operators.generate import generate, stamp_generated
@@ -43,6 +46,11 @@ from ..operators.updatedb import updatedb
 from ..schemas import FETCH_LOG, FRONTIER, empty_df
 from ..sources.snapshot import SnapshotTable
 from ..status import Fetch, Msg
+
+# URL-seen probe route: broadcast the shard table when its estimated size
+# (~1.2 B/url at 1% fpp, ~10^8 urls here) is at most this many bytes,
+# otherwise cogroup each probe bucket with its own shard (guide §3.1)
+URL_SEEN_BROADCAST_MAX_BYTES = 128 << 20
 
 
 @dataclass
@@ -108,12 +116,6 @@ class CrawlDriver:
         # POSTs these to its ES dashboard; the files ARE the payloads)
         self.analyze = analyze
         self.fetch_kwargs = fetch_kwargs
-        # URL-seen shard backend actually on disk ("cuckoo" | "bloom"),
-        # detected once from the shard schema then cached — the
-        # switch-detection probe in _refresh_seen_blooms otherwise costs
-        # a parquet schema read per cycle (local-fs cheap, object-store
-        # LIST+HEAD per refresh at scale)
-        self._seen_backend_on_disk: str | None = None
         # session-cached URL-seen shard frame (localCheckpoint'ed): the
         # shard table is immutable between refreshes, so the read +
         # checkpoint job runs once per on-disk version, not once per
@@ -135,6 +137,14 @@ class CrawlDriver:
         self.hostdb = SnapshotTable(os.path.join(workdir, "hostdb"), "hostdb")
 
     # ------------------------------------------------------------------
+    def _frontier_size(self) -> int | None:
+        """``frontier_size`` recorded with the newest frontier snapshot
+        (None before the first snapshot or for a snapshot without it)."""
+        hist = self.frontier.history()
+        if not hist:
+            return None
+        return (hist[-1]["metrics"] or {}).get("frontier_size")
+
     def _with_bucket(self, df: DataFrame) -> DataFrame:
         """Host-bucket column for partitioned frontier storage: point
         lookups and per-bucket MERGE-style rewrites prune to one bucket
@@ -191,59 +201,20 @@ class CrawlDriver:
         (false negatives → double-insert on the next cycle; the
         committed-cycle resume path is an early-return no-op and could
         never repair it)."""
-        from ..functions.hashing import (build_bloom_sharded,
-                                         build_cuckoo_sharded)
-
-        n_buckets = int(self.cfg.host_buckets)
-        want_cuckoo = self.cfg.url_seen_backend == "cuckoo"
-        switched = False
-        if os.path.exists(self._blooms_path):
-            # backend switched mid-crawl: a touched-only dynamic
-            # overwrite would leave stale other-backend shards in the
-            # untouched buckets — rebuild everything, staged to a side
-            # path (the rebuild's own lineage may still probe the OLD
-            # shards; deleting them first races the job) then swapped.
-            # The on-disk backend is detected from the shard schema once
-            # and cached (shards self-describe; only this driver writes
-            # them, so the cache can only go stale if an external actor
-            # rewrites the path mid-session — not a supported mode).
-            if self._seen_backend_on_disk is None:
-                have = self.spark.read.parquet(self._blooms_path).columns
-                self._seen_backend_on_disk = (
-                    "cuckoo" if "table" in have else "bloom")
-            if (self._seen_backend_on_disk == "cuckoo") != want_cuckoo:
-                switched = True
-                touched = None
         if frontier_df is not None:
             frontier = frontier_df
         else:
             frontier = self.frontier.read(self.spark)
         if touched is not None:
             frontier = frontier.filter(F.col("bucket").isin(touched))
-        hist = self.frontier.history()
-        cap = ((hist[-1]["metrics"] or {}).get("frontier_size")
-               if hist else None) or max(frontier.count(), 1024)
-        builder = (build_cuckoo_sharded
-                   if self.cfg.url_seen_backend == "cuckoo"
-                   else build_bloom_sharded)
-        built = builder(
-            frontier, "url", int(cap), n_buckets,
+        cap = self._frontier_size() or max(frontier.count(), 1024)
+        built = build_bloom_sharded(
+            frontier, "url", int(cap), int(self.cfg.host_buckets),
             bucket_expr=F.col("bucket").cast("int"),
         )
-        if switched:
-            import shutil
-            staged = self._blooms_path + ".next"
-            if os.path.exists(staged):
-                shutil.rmtree(staged)
-            (built.write.mode("overwrite")
-             .partitionBy("bucket").parquet(staged))
-            shutil.rmtree(self._blooms_path)
-            os.rename(staged, self._blooms_path)
-        else:
-            (built.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("bucket").parquet(self._blooms_path))
-        self._seen_backend_on_disk = "cuckoo" if want_cuckoo else "bloom"
+        (built.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy("bucket").parquet(self._blooms_path))
         self._blooms_df = None  # on-disk shards changed: drop the cache
 
     def _load_or_build_blooms(self) -> DataFrame:
@@ -269,57 +240,36 @@ class CrawlDriver:
 
     def _probe_seen(self, parse_out: DataFrame):
         """(non-linked rows, linked rows with a ``maybe_seen`` flag).
-        The prober follows the SHARDS' schema, not the config — shards
-        on disk self-describe (cuckoo rows carry ``table``, bloom rows
-        ``bits``), so a backend switch stays correct between the config
-        change and the next shard refresh."""
-        from ..functions.hashing import (BloomFilter,
-                                         bloom_contains_broadcast,
-                                         bloom_contains_sharded,
-                                         cuckoo_contains_sharded)
 
+        Scale-adaptive probe route (guide §3.1): the shard table is priced
+        from the frontier-size metric (no Spark job) and broadcast when it
+        fits, making the probe a shuffle-free mapInPandas.  Unknown size
+        (no metric yet) or past the gate → the bucket cogroup."""
         blooms = self._load_or_build_blooms()
         linked = parse_out.filter(F.col("status") == int(Msg.LINKED))
         rest = parse_out.filter(F.col("status") != int(Msg.LINKED))
         n_buckets = int(self.cfg.host_buckets)
-        prober = (cuckoo_contains_sharded if "table" in blooms.columns
+        cap = self._frontier_size()
+        prober = (bloom_contains_broadcast
+                  if cap is not None and shard_table_bytes(int(cap), n_buckets)
+                  <= URL_SEEN_BROADCAST_MAX_BYTES
                   else bloom_contains_sharded)
-        if prober is bloom_contains_sharded:
-            # scale-adaptive probe route (guide §3.1): estimate total
-            # shard bytes from the frontier-size metric (no Spark job —
-            # the same estimate _refresh_seen_blooms sizes shards with)
-            # and broadcast the whole shard table when it fits, making
-            # the probe a shuffle-free mapInPandas.  Unknown size (no
-            # metric yet) or past the gate → the cogroup path.
-            hist = self.frontier.history()
-            cap = ((hist[-1]["metrics"] or {}).get("frontier_size")
-                   if hist else None)
-            if cap is not None:
-                m, _ = BloomFilter.params(
-                    max(int(cap) // n_buckets, 1024))
-                if (m // 8) * n_buckets <= int(
-                        self.cfg.url_seen_broadcast_max_bytes):
-                    prober = bloom_contains_broadcast
         probed = prober(
             linked, "url", blooms, n_buckets=n_buckets,
             bucket_expr=self._host_bucket_expr(),
         )
         return rest, probed
 
-    def _seen_filtered(self, parse_out: DataFrame) -> DataFrame:
-        """additions-OFF accel: drop definitely-new LINKED rows — they
-        were doomed in updatedb anyway (false positives safe: "maybe seen"
-        still flows through the exact join)."""
-        rest, probed = self._probe_seen(parse_out)
-        return rest.unionByName(
-            probed.filter(F.col("maybe_seen")).drop("maybe_seen"))
-
     def _seen_split(self, parse_out: DataFrame):
-        """additions-ON accel: nothing is dropped — definitely-new LINKED
-        rows (no bloom false negatives by the refresh invariant) skip the
-        frontier join entirely and take the direct new-row path; only
-        maybe-seen rows enter the exact merge.  Returns
-        (main_parse_out, definitely_new_linked)."""
+        """Split LINKED rows on the URL-seen probe.  Returns
+        (main_parse_out, definitely_new_linked): ``main`` keeps every
+        non-linked row and the maybe-seen linked rows, which enter the
+        exact merge (false positives are safe).
+
+        additions-ON: definitely-new rows (no bloom false negatives by the
+        refresh invariant) skip the frontier join and take the direct
+        new-row path.  additions-OFF: the caller drops them — they were
+        doomed in updatedb anyway."""
         rest, probed = self._probe_seen(parse_out)
         main = rest.unionByName(
             probed.filter(F.col("maybe_seen")).drop("maybe_seen"))
@@ -345,8 +295,14 @@ class CrawlDriver:
         stamps.  In bucketed mode only the fetchlist-host buckets changed,
         so the stamp is a MERGE commit over those buckets — a full rewrite
         here would make every cycle O(frontier) and (being merge-less)
-        reset the hostdb touched-bucket tracking."""
+        reset the hostdb touched-bucket tracking.
+
+        The stamp is a left join on unique fetchlist urls, so it keeps
+        the row count: the snapshot carries its parent's
+        ``frontier_size`` forward, and the next merge cycle still sizes
+        itself without a full-frontier count."""
         stamped = stamp_generated(frontier, fetchlist, cur_time)
+        metrics = {"frontier_size": self._frontier_size()}
         if self.bucketed and self.frontier.exists():
             tb = [
                 r["b"] for r in fetchlist.select(
@@ -358,12 +314,13 @@ class CrawlDriver:
                 return
             sb = self._with_bucket(stamped).filter(F.col("bucket").isin(tb))
             self.frontier.merge_write(
-                sb, tb, cycle_id=f"gen@{cycle_id}",
+                sb, tb, cycle_id=f"gen@{cycle_id}", metrics=metrics,
                 sort_within=["bucket", "fetch_time"],
                 distribute_by=["bucket"],
             )
         else:
-            self._write_frontier(stamped, cycle_id=f"gen@{cycle_id}")
+            self._write_frontier(stamped, cycle_id=f"gen@{cycle_id}",
+                                 metrics=metrics)
 
     def _complete_ancillary(self, cycle_id: int) -> None:
         """Finish linkdb/hostdb for a cycle whose frontier committed but
@@ -515,7 +472,7 @@ class CrawlDriver:
                 seen_new = seen_new.join(
                     log.select("url"), "url", "left_anti").persist()
             else:
-                parse_out = self._seen_filtered(po_raw)
+                parse_out, _ = self._seen_split(po_raw)
         # rows that actually feed updatedb (the filtered/split view)
         po_updatedb = (parse_out if seen_new is None
                        else parse_out.unionByName(seen_new))
@@ -662,8 +619,7 @@ class CrawlDriver:
             # partition-pruned to the touched buckets — no full-frontier
             # job in a merge cycle (the fallback full count only runs for
             # pre-metric legacy snapshots, and is counted for tests).
-            hist = self.frontier.history()
-            parent_size = (hist[-1]["metrics"] or {}).get("frontier_size")
+            parent_size = self._frontier_size()
             label("commit:new_count")
             new_touched_rows = new_frontier.count()
             if parent_size is not None:

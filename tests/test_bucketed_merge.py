@@ -111,17 +111,23 @@ def test_hostdb_every_gates_the_full_scan(spark, tmp_path):
 def test_incremental_frontier_size_no_full_job(spark, tmp_path):
     """Merge cycles derive frontier_size from parent size + touched-bucket
     deltas: no full-frontier count job runs (driver counter stays 0), and
-    the metric equals the true full count."""
-    d = CrawlDriver(spark, str(tmp_path / "m"), CFG, bucketed=True,
-                    full_rewrite_every=1000, **KW)
-    d.inject(seeds_df(spark), T0)
-    for k in range(3):
-        m = d.run_cycle(k, T0 + 1000 + k * 3_600_000)
-        true_size = d.frontier.read(spark).count()
-        assert m.frontier_size == true_size, f"cycle {k} metric diverged"
-        rec = d.frontier.history()[-1]["metrics"]["frontier_size"]
-        assert rec == true_size  # recorded at write time, not patched after
-    assert d._full_count_jobs == 0
+    the metric equals the true full count.  With generate.update.crawldb
+    the ``gen@`` stamp commit sits between cycles and must carry the
+    size forward."""
+    for gen_stamp in (False, True):
+        d = CrawlDriver(spark, str(tmp_path / f"m{int(gen_stamp)}"),
+                        CFG.with_(generate_update_crawldb=gen_stamp),
+                        bucketed=True, full_rewrite_every=1000, **KW)
+        d.inject(seeds_df(spark), T0)
+        for k in range(3):
+            m = d.run_cycle(k, T0 + 1000 + k * 3_600_000)
+            true_size = d.frontier.read(spark).count()
+            assert m.frontier_size == true_size, \
+                f"gen_stamp={gen_stamp} cycle {k} metric diverged"
+            # recorded at write time, not patched after
+            rec = d.frontier.history()[-1]["metrics"]["frontier_size"]
+            assert rec == true_size
+        assert d._full_count_jobs == 0, f"gen_stamp={gen_stamp}"
 
 
 def test_bucketed_mid_cycle_resume(spark, tmp_path):

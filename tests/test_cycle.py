@@ -128,13 +128,17 @@ def test_url_seen_filter_cycle_identity(spark, tmp_path):
     assert os.path.exists(str(tmp_path / "seen" / "url_seen_blooms"))
 
 
-def test_url_seen_additions_on_cycle_identity(spark, tmp_path):
+def test_url_seen_additions_on_cycle_identity(spark, tmp_path, monkeypatch):
     """additions-ON + URL-seen: definitely-new links take the direct
     new-row path, shards are refreshed per cycle from the committed
     frontier — across multiple cycles the frontier is IDENTICAL to the
     unfiltered plan (a stale shard would double-insert existing urls;
-    a false drop would lose links — both diverge here)."""
+    a false drop would lose links — both diverge here).  The last case
+    sets the broadcast size gate to 0, so the driver probes through the
+    bucket cogroup instead of the broadcast."""
     import os
+
+    from coherencebot_spark.plans import cycle as cycle_mod
 
     def snap(d):
         return sorted(
@@ -142,8 +146,19 @@ def test_url_seen_additions_on_cycle_identity(spark, tmp_path):
             for r in d.frontier.read(spark).collect()
         )
 
-    for bucketed in (False, True):
-        sub = tmp_path / f"b{int(bucketed)}"
+    cogroup_calls = []
+    cogroup = cycle_mod.bloom_contains_sharded
+
+    def counting_cogroup(*a, **kw):
+        cogroup_calls.append(1)
+        return cogroup(*a, **kw)
+
+    monkeypatch.setattr(cycle_mod, "bloom_contains_sharded", counting_cogroup)
+    for bucketed, gate in ((False, None), (True, None), (True, 0)):
+        if gate is not None:
+            monkeypatch.setattr(cycle_mod, "URL_SEEN_BROADCAST_MAX_BYTES",
+                                gate)
+        sub = tmp_path / f"b{int(bucketed)}-{gate}"
         base = CrawlDriver(spark, str(sub / "base"), CFG,
                            bucketed=bucketed, **FETCH_KW)
         seen = CrawlDriver(spark, str(sub / "seen"),
@@ -155,50 +170,11 @@ def test_url_seen_additions_on_cycle_identity(spark, tmp_path):
             t = T0 + 1000 + k * 3_600_000
             base.run_cycle(k, t)
             seen.run_cycle(k, t)
-            assert snap(base) == snap(seen), f"bucketed={bucketed} cycle {k}"
+            assert snap(base) == snap(seen), \
+                f"bucketed={bucketed} gate={gate} cycle {k}"
         assert os.path.exists(str(sub / "seen" / "url_seen_blooms"))
-
-
-def test_url_seen_cuckoo_backend_cycle_identity(spark, tmp_path):
-    """cfg.url_seen_backend='cuckoo' drives the whole loop through the
-    sharded cuckoo filters (north rule "bloom/cuckoo") — additions-ON,
-    multi-cycle, frontier IDENTICAL to the unfiltered plan; and a
-    mid-crawl backend switch triggers the one-time full shard rebuild
-    (self-describing shards: cuckoo rows carry ``table``)."""
-    import os
-
-    def snap(d):
-        return sorted(
-            (r.url, r.status, r.fetch_time, r.retries, float(r.score))
-            for r in d.frontier.read(spark).collect()
-        )
-
-    base = CrawlDriver(spark, str(tmp_path / "base"), CFG, **FETCH_KW)
-    ck = CrawlDriver(spark, str(tmp_path / "ck"),
-                     CFG.with_(use_url_seen=True,
-                               url_seen_backend="cuckoo"), **FETCH_KW)
-    for d in (base, ck):
-        d.inject(seeds_df(spark), T0)
-    for k in range(2):
-        t = T0 + 1000 + k * 3_600_000
-        base.run_cycle(k, t)
-        ck.run_cycle(k, t)
-        assert snap(base) == snap(ck), f"cycle {k}"
-    shards = spark.read.parquet(
-        os.path.join(str(tmp_path / "ck"), "url_seen_blooms"))
-    assert "table" in shards.columns          # cuckoo, not bloom, shards
-
-    # switch the SAME crawl back to bloom: next cycle must rebuild the
-    # store wholesale (no stale cuckoo shards left behind) and still
-    # match the unfiltered plan
-    ck.cfg = ck.cfg.with_(url_seen_backend="bloom")
-    t = T0 + 1000 + 2 * 3_600_000
-    base.run_cycle(2, t)
-    ck.run_cycle(2, t)
-    assert snap(base) == snap(ck)
-    shards = spark.read.parquet(
-        os.path.join(str(tmp_path / "ck"), "url_seen_blooms"))
-    assert "bits" in shards.columns and "table" not in shards.columns
+        # the default gate broadcasts; gate 0 takes the cogroup every cycle
+        assert len(cogroup_calls) == (0 if gate is None else 2)
 
 
 def test_free_generate(spark):
