@@ -97,6 +97,50 @@ def test_url_seen_filter(spark):
     shards.unpersist()
 
 
+def test_sharded_url_seen_matches_monolithic(spark):
+    """Host-aligned bloom shards answer membership with the same contract
+    as one monolithic bloom (a single shard over the whole frontier):
+    zero false negatives on every inserted URL, and the definitely-new
+    drop rate holds.  Exact bit-for-bit equality is not expected — the
+    shards use per-bucket m/k — the contract is what updatedb relies on."""
+    from pyspark.sql import functions as F
+
+    from coherencebot_spark.functions.hashing import (
+        bloom_contains_sharded, build_bloom_sharded)
+
+    n_buckets = 16
+    hostb = F.pmod(F.xxhash64(F.col("host")), F.lit(n_buckets)).cast("int")
+    # 40 hosts so URLs spread over many of the 16 buckets
+    frontier = spark.createDataFrame(
+        [frow(f"https://h{i % 40}.example.org/p{i}") for i in range(800)],
+        FRONTIER)
+    mono = build_bloom_sharded(frontier, "url", capacity=800, n_buckets=1)
+    shard = build_bloom_sharded(frontier, "url", capacity=800,
+                                n_buckets=n_buckets,
+                                bucket_expr=hostb).persist()
+    assert mono.count() == 1
+    assert shard.count() > 4  # genuinely multi-bucket
+
+    probe = spark.createDataFrame(
+        [(f"https://h{i % 40}.example.org/p{i}", f"h{i % 40}.example.org")
+         for i in range(600, 1000)],
+        "url string, host string")
+    kept_mono = {r.url for r in bloom_contains_sharded(
+        probe, "url", mono, n_buckets=1).filter("maybe_seen").collect()}
+    kept_shard = {r.url for r in bloom_contains_sharded(
+        probe, "url", shard, n_buckets=n_buckets,
+        bucket_expr=hostb).filter("maybe_seen").collect()}
+    seen_urls = {f"https://h{i % 40}.example.org/p{i}" for i in range(600, 800)}
+    # no false negatives in either layout
+    assert seen_urls <= kept_mono
+    assert seen_urls <= kept_shard
+    # definitely-new URLs are mostly dropped by both (fpp ~1% of 200)
+    assert len(kept_mono - seen_urls) <= 10
+    assert len(kept_shard - seen_urls) <= 10
+    assert probe.count() - len(kept_shard) >= 180  # counted as new
+    shard.unpersist()
+
+
 def test_elastic_bulk_round_trip(spark, tmp_path):
     """indexer-elastic analogue: _bulk NDJSON with index + delete actions
     parses back exactly (escaping-safe ids, hex binaries)."""
