@@ -58,10 +58,6 @@ class CrawlConfig:
     # generate to the CLI) for exactly that migration scenario.
     # Documented deviation from the reference default.
     normalise_on_generate: bool = False
-    # partition_id/hostordomain via distinct-host broadcast (see
-    # generate._with_host_attrs); turn off when the host universe itself
-    # is too large to broadcast (falls back to per-row pandas UDFs)
-    host_attrs_broadcast: bool = True
     # URL-seen bloom pre-filter in the cycle (north rule): per-host-bucket
     # bloom shards (functions.hashing.build_bloom_sharded).  additions-off
     # drops definitely-new link targets BEFORE the updatedb shuffle;

@@ -127,40 +127,14 @@ def _gates(frontier: DataFrame, cur_time: int, cfg: CrawlConfig,
     return df
 
 
-def _with_partition(df: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    seed, nparts = cfg.seed, cfg.num_partitions
-
-    @F.pandas_udf(IntegerType())
-    def _part(host: pd.Series) -> pd.Series:
-        return pd.Series(host_partition(host.fillna(""), seed, nparts), index=host.index)
-
-    return df.withColumn("partition_id", _part(F.col("host")))
-
-
-def _with_hostordomain(df: DataFrame, cfg: CrawlConfig) -> DataFrame:
-    if cfg.count_mode == "byDomain":
-        @F.pandas_udf("string")
-        def _dom(host: pd.Series) -> pd.Series:
-            return domain_of(host).astype(object)
-
-        return df.withColumn("hostordomain", _dom(F.col("host")))
-    return df.withColumn("hostordomain", F.col("host"))
-
-
 def _with_host_attrs(df: DataFrame, cfg: CrawlConfig) -> DataFrame:
     """partition_id + hostordomain via the DISTINCT-host side channel.
 
     Both columns are pure functions of ``host``, so the Java-hash Arrow
     round-trip only needs to touch |distinct hosts| rows (≈10^4-10^6),
     not |frontier| (≈10^10) — computed per distinct host and
-    broadcast-joined back.  Falls back to the per-row pandas UDFs
-    (:func:`_with_partition`/:func:`_with_hostordomain`, linear but
-    fully distributed) when ``cfg.host_attrs_broadcast`` is off — the
-    right choice if the host universe itself is too big to broadcast.
+    broadcast-joined back.
     """
-    if not getattr(cfg, "host_attrs_broadcast", True):
-        return _with_hostordomain(_with_partition(df, cfg), cfg)
-
     seed, nparts = cfg.seed, cfg.num_partitions
     by_domain = cfg.count_mode == "byDomain"
 

@@ -28,7 +28,7 @@ import json
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import CrawlConfig, DEFAULT
@@ -72,6 +72,44 @@ class CycleMetrics:
 
     def as_dict(self) -> dict:
         return dict(self.__dict__)
+
+
+def _free_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of a ``localCheckpoint``'ed frame (``unpersist``
+    does not reach them; the context cleaner only does on a JVM GC)."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(True)
+
+
+class _Cuts:
+    """The cycle's cut points and everything it keeps in storage
+    (PLANS.md §crawl cycle).
+
+    ``cut`` materializes a frame once with ``localCheckpoint`` — every
+    later action plans against that small leaf instead of re-planning
+    (and re-running) the upstream cycle — and records, under their
+    aliases in ``observed``, the ``observe`` metrics that the same job
+    computed.  ``cache`` is the list the operators append their internal
+    persists to (fetch log, parsed pages, updatedb delta).  ``release``
+    frees both at cycle end."""
+
+    def __init__(self):
+        self.cache: list[DataFrame] = []
+        self.observed: dict = {}
+        self._cps: list[DataFrame] = []
+
+    def cut(self, df: DataFrame, *metrics) -> DataFrame:
+        obs = Observation()
+        df = df.observe(obs, *metrics).localCheckpoint()
+        self._cps.append(df)
+        self.observed.update(obs.get)
+        return df
+
+    def release(self) -> None:
+        for df in self.cache:
+            df.unpersist()
+        for df in self._cps:
+            _free_checkpoint(df)
+        self.cache, self._cps, self.observed = [], [], {}
 
 
 class CrawlDriver:
@@ -121,6 +159,8 @@ class CrawlDriver:
         # checkpoint job runs once per on-disk version, not once per
         # probe (invalidated by _refresh_seen_blooms)
         self._blooms_df = None
+        # this cycle's checkpoints, operator caches and observed counts
+        self._cuts = _Cuts()
         # full-frontier count jobs taken for the frontier_size metric in
         # merge cycles (0 in steady state — tests assert this)
         self._full_count_jobs = 0
@@ -215,25 +255,20 @@ class CrawlDriver:
         (built.write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("bucket").parquet(self._blooms_path))
-        self._blooms_df = None  # on-disk shards changed: drop the cache
+        if self._blooms_df is not None:
+            # on-disk shards changed: drop the checkpointed old ones
+            _free_checkpoint(self._blooms_df)
+            self._blooms_df = None
 
     def _load_or_build_blooms(self) -> DataFrame:
         if self._blooms_df is not None:
             return self._blooms_df
         if not os.path.exists(self._blooms_path):
             self._refresh_seen_blooms(None)
-        # localCheckpoint cuts the file-scan lineage (guide §5): every
-        # cached frame this cycle builds (parsed / seen_new / delta /
-        # new_frontier) carries the URL-seen probe in its plan, and a
-        # plan that SCANS self._blooms_path is invalidated by Spark's
-        # recacheByPath when _refresh_seen_blooms overwrites the shards
-        # — which used to silently re-execute the whole updatedb+dedup
-        # pipeline in the commit phase (measured: the commit's count job
-        # re-ran 36 stages).  Checkpointing the tiny shard frame (a few
-        # MB) makes the refresh write invisible to the cache manager.
-        # The checkpointed frame is cached on the driver object: shards
-        # are immutable between refreshes, so re-reading them for every
-        # probe was a repeated scan job of identical data (guide §5).
+        # checkpointed and kept on the driver object: shards are immutable
+        # between refreshes, so they are read once per on-disk version,
+        # not once per probe (guide §5), and no plan still scans the path
+        # when _refresh_seen_blooms overwrites it
         self._blooms_df = (
             self.spark.read.parquet(self._blooms_path).localCheckpoint())
         return self._blooms_df
@@ -244,7 +279,10 @@ class CrawlDriver:
         Scale-adaptive probe route (guide §3.1): the shard table is priced
         from the frontier-size metric (no Spark job) and broadcast when it
         fits, making the probe a shuffle-free mapInPandas.  Unknown size
-        (no metric yet) or past the gate → the bucket cogroup."""
+        (no metric yet) or past the gate → the bucket cogroup.
+
+        ``probed`` is a cut: the probe runs once, and the buckets of the
+        maybe-seen rows land in ``observed["maybe_seen_buckets"]``."""
         blooms = self._load_or_build_blooms()
         linked = parse_out.filter(F.col("status") == int(Msg.LINKED))
         rest = parse_out.filter(F.col("status") != int(Msg.LINKED))
@@ -258,7 +296,16 @@ class CrawlDriver:
             linked, "url", blooms, n_buckets=n_buckets,
             bucket_expr=self._host_bucket_expr(),
         )
+        probed = self._cuts.cut(probed, self._buckets_where(
+            F.col("maybe_seen"), "maybe_seen_buckets"))
         return rest, probed
+
+    def _buckets_where(self, cond, alias: str):
+        """Observed metric: the set of host buckets of rows with a host
+        where ``cond`` holds."""
+        return F.collect_set(F.when(
+            cond & F.col("host").isNotNull(), self._host_bucket_expr()
+        )).alias(alias)
 
     def _seen_split(self, parse_out: DataFrame):
         """Split LINKED rows on the URL-seen probe.  Returns
@@ -290,12 +337,13 @@ class CrawlDriver:
 
     # ------------------------------------------------------------------
     def _write_gen_stamp(self, frontier: DataFrame, fetchlist: DataFrame,
-                         cur_time: int, cycle_id: int) -> None:
+                         cur_time: int, cycle_id: int,
+                         tb: list[int]) -> None:
         """generate.update.crawldb: persist the ``_ngt_`` pending-generate
-        stamps.  In bucketed mode only the fetchlist-host buckets changed,
-        so the stamp is a MERGE commit over those buckets — a full rewrite
-        here would make every cycle O(frontier) and (being merge-less)
-        reset the hostdb touched-bucket tracking.
+        stamps.  In bucketed mode only the fetchlist-host buckets ``tb``
+        changed, so the stamp is a MERGE commit over those buckets — a
+        full rewrite here would make every cycle O(frontier) and (being
+        merge-less) reset the hostdb touched-bucket tracking.
 
         The stamp is a left join on unique fetchlist urls, so it keeps
         the row count: the snapshot carries its parent's
@@ -304,12 +352,6 @@ class CrawlDriver:
         stamped = stamp_generated(frontier, fetchlist, cur_time)
         metrics = {"frontier_size": self._frontier_size()}
         if self.bucketed and self.frontier.exists():
-            tb = [
-                r["b"] for r in fetchlist.select(
-                    F.pmod(F.xxhash64("host"),
-                           F.lit(int(self.cfg.host_buckets))).alias("b")
-                ).distinct().collect()
-            ]
             if not tb:
                 return
             sb = self._with_bucket(stamped).filter(F.col("bucket").isin(tb))
@@ -398,6 +440,7 @@ class CrawlDriver:
 
         label("segment")
 
+        cuts = self._cuts
         resumed = self.fetch_log.snapshot_for_cycle(cycle_id)
         csnap = self.content.snapshot_for_cycle(cycle_id)
         if resumed and csnap:
@@ -410,72 +453,99 @@ class CrawlDriver:
             # exactly like the reference re-running an incomplete segment;
             # the fresh snapshots supersede the orphan in the manifest.
             frontier = self.frontier.read(self.spark).drop("bucket")
-            fetchlist = generate(frontier, cur_time, cfg,
-                                 broadcast_select=cfg.broadcast_small_sides)
+            # cut 1, the fetchlist: the gen stamp and fetch's robots
+            # allowed/denied branches each read it, and without the cut
+            # each re-ran generate's scan and pandas stages
+            fetchlist = cuts.cut(
+                generate(frontier, cur_time, cfg,
+                         broadcast_select=cfg.broadcast_small_sides),
+                F.collect_set(self._host_bucket_expr())
+                .alias("fetchlist_buckets"))
             if cfg.generate_update_crawldb:
-                # the stamp write + the fetch below both consume the
-                # selection — cache it so generate runs once
-                fetchlist = fetchlist.persist()
-                self._write_gen_stamp(frontier, fetchlist, cur_time, cycle_id)
-            seg_cache: list = []
+                self._write_gen_stamp(frontier, fetchlist, cur_time, cycle_id,
+                                      cuts.observed["fetchlist_buckets"])
             if cfg.redirect_max > 0:
                 from ..operators.fetch import fetch_with_redirects
                 log, content = fetch_with_redirects(
-                    fetchlist, cur_time, cfg, cache=seg_cache,
+                    fetchlist, cur_time, cfg, cache=cuts.cache,
                     **self.fetch_kwargs)
             else:
                 log, content = fetch(fetchlist, cur_time, cfg,
-                                     cache=seg_cache, **self.fetch_kwargs)
+                                     cache=cuts.cache, **self.fetch_kwargs)
             # durable midpoint: the "segment" commit (checkpoint/resume).
-            # fetch cached its internal log (byte-free) via seg_cache, so
+            # fetch cached its internal log (byte-free) in cuts.cache, so
             # BOTH writes materialize the same single fetch execution —
             # with a real protocol backend a second execution would both
             # double-fetch and let the two snapshots diverge on
             # nondeterministic outcomes.
             self.fetch_log.write(log, cycle_id=cycle_id)
             self.content.write(content, cycle_id=cycle_id)
-            for c in seg_cache:
-                c.unpersist()
-            if cfg.generate_update_crawldb:
-                fetchlist.unpersist()
             log = self.fetch_log.read(self.spark)
             content = self.content.read(self.spark)
-        tick("segment")  # generate + fetch + payload + segment commit
-        label("touched_buckets")
 
-        # parse + redirect-linked rows — the RAW link universe, before any
-        # URL-seen filtering (metrics + linkdb must see every discovered
-        # link; the reference's linkdb inverts all parse outlinks
-        # regardless of crawldb membership)
-        parse_cache: list = []
-        po_raw = parse(log, content, cfg,
-                       cache=parse_cache).unionByName(redirect_link_rows(log))
+        # per-partition lineage (north rule): ONE pass over the segment's
+        # fetch log yields it and (summed driver-side) the global status
+        # counters; the buckets of the fetched hosts are observed on the
+        # same pass.  per_partition needs a grouping, which observe cannot
+        # do, so this action stays.
+        log_obs = Observation()
+        per_part = (
+            log.observe(log_obs,
+                        self._buckets_where(F.lit(True), "log_buckets"))
+            .withColumn("p", F.spark_partition_id())
+            .groupBy("p", "status").count().collect()
+        )
+        status_counts: dict[int, int] = {}
+        for r in per_part:
+            m.per_partition.setdefault(str(r["p"]), {})[str(r["status"])] = r["count"]
+            status_counts[r["status"]] = status_counts.get(r["status"], 0) + r["count"]
+        m.fetched = status_counts.get(int(Fetch.SUCCESS), 0)
+        m.redirected = (status_counts.get(int(Fetch.REDIR_TEMP), 0)
+                        + status_counts.get(int(Fetch.REDIR_PERM), 0))
+        m.gone = status_counts.get(int(Fetch.GONE), 0)
+        m.retry = status_counts.get(int(Fetch.RETRY), 0)
+        m.notmodified = status_counts.get(int(Fetch.NOTMODIFIED), 0)
+        m.generated = sum(status_counts.values())
+        tick("segment")  # generate + fetch + payload + commit + lineage
+        label("parse")
 
-        # URL-seen bloom pre-filter (north rule).  additions-OFF: drop
-        # definitely-new link targets before they ever shuffle into
-        # updatedb (false positives safe — "maybe seen" still flows
-        # through the exact join; the key-set is frozen, shards build
-        # once).  additions-ON: split instead of drop — definitely-new
-        # targets skip the frontier join and take the direct new-row
-        # path; the touched shards are rebuilt after this cycle's commit
-        # so the no-false-negative invariant holds next cycle.
+        # cut 2, parse + redirect-linked rows — the RAW link universe,
+        # before any URL-seen filtering (metrics + linkdb must see every
+        # discovered link; the reference's linkdb inverts all parse
+        # outlinks regardless of crawldb membership).  The probe, both
+        # updatedb calls, the new-link count and linkdb read it.
+        po_raw = cuts.cut(
+            parse(log, content, cfg,
+                  cache=cuts.cache).unionByName(redirect_link_rows(log)),
+            self._buckets_where(F.col("status") != int(Msg.LINKED),
+                                "rest_buckets"),
+            self._buckets_where(F.col("status") == int(Msg.LINKED),
+                                "linked_buckets"))
+        tick("parse")
+
+        # URL-seen bloom pre-filter (north rule); cut 3 is the probe
+        # result (_probe_seen).  additions-OFF: drop definitely-new link
+        # targets before they ever shuffle into updatedb (false positives
+        # safe — "maybe seen" still flows through the exact join; the
+        # key-set is frozen, shards build once).  additions-ON: split
+        # instead of drop — definitely-new targets skip the frontier join
+        # and take the direct new-row path; the touched shards are
+        # rebuilt before this cycle's commit so the no-false-negative
+        # invariant holds next cycle.
         parse_out = po_raw
         seen_new = None
         if cfg.use_url_seen:
-            if cfg.additions_allowed:
-                parse_out, seen_new = self._seen_split(po_raw)
-                # a redirect target FETCHED in-cycle (redirect_max>0) is
-                # definitely-new to the bloom but already enters the main
-                # updatedb through its fetch row — routing its LINKED row
-                # through the direct new-row path too would commit the
-                # url TWICE into the frontier
-                seen_new = seen_new.join(
-                    log.select("url"), "url", "left_anti").persist()
-            else:
-                parse_out, _ = self._seen_split(po_raw)
-        # rows that actually feed updatedb (the filtered/split view)
-        po_updatedb = (parse_out if seen_new is None
-                       else parse_out.unionByName(seen_new))
+            label("url_seen_probe")
+            parse_out, seen_new = self._seen_split(po_raw)
+            # a redirect target FETCHED in-cycle (redirect_max>0) is
+            # definitely-new to the bloom but already enters the main
+            # updatedb through its fetch row — routing its LINKED row
+            # through the direct new-row path too would commit the url
+            # TWICE into the frontier
+            seen_new = (seen_new.join(log.select("url"), "url", "left_anti")
+                        if cfg.additions_allowed else None)
+            tick("url_seen_probe")
+        label("updatedb")
 
         # compaction cadence counts CRAWL CYCLES, not manifest entries —
         # inject@/gen@/seed snapshots would otherwise drift the "full
@@ -489,39 +559,28 @@ class CrawlDriver:
         )
         touched: list[int] = []
         if use_merge:
-            # buckets touched this cycle: every host the fetchlist selected
-            # (incl. time-limit-dropped rows) ∪ every link/redirect target
-            # host that can change a frontier row.  Rows of untouched
-            # buckets are identity under updatedb, so rewriting only
-            # touched buckets is exact.  (additions-OFF dropped links are
-            # provably no-ops and deliberately NOT counted as touched.)
-            po_raw = po_raw.persist()
-            hosts = (
-                log.select("host")
-                .unionByName(po_updatedb.select("host"))
-                .filter(F.col("host").isNotNull())
-                .distinct()
-                .select(
-                    F.pmod(F.xxhash64("host"), F.lit(int(cfg.host_buckets)))
-                    .alias("b")
-                )
-                .distinct()
-            )
-            touched = [r["b"] for r in hosts.collect()]
-            tick("touched_buckets")
-            label("metrics")
-            frontier_all = self.frontier.read(self.spark)
-            frontier = (
-                frontier_all.filter(F.col("bucket").isin(touched)).drop("bucket")
-            )
+            # buckets touched this cycle, observed on the passes above:
+            # every host the segment holds (incl. time-limit-dropped rows)
+            # ∪ every link/redirect target host that can change a frontier
+            # row.  Rows of untouched buckets are identity under updatedb,
+            # so rewriting only touched buckets is exact.  (additions-OFF
+            # dropped links are provably no-ops and deliberately NOT
+            # counted as touched.)
+            obs = cuts.observed
+            links = (obs["maybe_seen_buckets"]
+                     if cfg.use_url_seen and not cfg.additions_allowed
+                     else obs["linked_buckets"])
+            touched = sorted(set(log_obs.get["log_buckets"])
+                             | set(obs["rest_buckets"]) | set(links))
+            frontier = (self.frontier.read(self.spark)
+                        .filter(F.col("bucket").isin(touched)).drop("bucket"))
         else:
             frontier = self.frontier.read(self.spark).drop("bucket")
 
-        upd_cache: list = []
         new_frontier = updatedb(frontier, log, parse_out, cur_time, cfg,
                                 seeds_in_service=seeds_in_service,
                                 broadcast_delta=cfg.broadcast_small_sides,
-                                cache=upd_cache)
+                                cache=cuts.cache)
         if seen_new is not None:
             # definitely-new targets: same updatedb semantics against an
             # EMPTY frontier — produces exactly the new-row (linked_new)
@@ -532,12 +591,11 @@ class CrawlDriver:
                 updatedb(empty_f, empty_log, seen_new, cur_time, cfg,
                          seeds_in_service=seeds_in_service)
             )
-        # dedup instantiates its input subtree twice (phash attach + dup
-        # mark-back join): persist the pre-dedup merge so one evaluation
-        # feeds both sides instead of re-running the whole updatedb plan
-        # (bench.run_cycle applies the same discipline)
+        # dedup reads its input twice (phash attach + dup mark-back join):
+        # the persist lets one updatedb evaluation feed both sides inside
+        # cut 4's job, which then drops this lineage from later plans
         new_frontier = new_frontier.persist()
-        upd_cache.append(new_frontier)
+        cuts.cache.append(new_frontier)
         new_frontier = dedup_by_phash(
             new_frontier, content, cfg,
             broadcast_content=cfg.broadcast_small_sides)
@@ -553,83 +611,61 @@ class CrawlDriver:
                     "phash_meta", F.col("metadata").getItem("img.phash")),
                 cfg, key_col="phash_meta",
             ).drop("phash_meta")
+        # cut 4, the pre-commit next frontier (touched buckets in a merge
+        # cycle, the whole frontier in a full rewrite): the shard refresh
+        # and the commit read it, and its row count rides the same job
+        new_frontier = cuts.cut(new_frontier,
+                                F.count(F.lit(1)).alias("next_rows"))
 
-        label("metrics")
-        # metrics + per-partition lineage (north rule): ONE pass over the
-        # fetch log yields both the per-partition lineage and (summed
-        # driver-side) the global status counters — the former separate
-        # global groupBy was a second full log scan per cycle
-        per_part = (
-            log.withColumn("p", F.spark_partition_id())
-            .groupBy("p", "status").count().collect()
-        )
-        status_counts: dict[int, int] = {}
-        for r in per_part:
-            m.per_partition.setdefault(str(r["p"]), {})[str(r["status"])] = r["count"]
-            status_counts[r["status"]] = status_counts.get(r["status"], 0) + r["count"]
-        m.fetched = status_counts.get(int(Fetch.SUCCESS), 0)
-        m.redirected = (status_counts.get(int(Fetch.REDIR_TEMP), 0)
-                        + status_counts.get(int(Fetch.REDIR_PERM), 0))
-        m.gone = status_counts.get(int(Fetch.GONE), 0)
-        m.retry = status_counts.get(int(Fetch.RETRY), 0)
-        m.notmodified = status_counts.get(int(Fetch.NOTMODIFIED), 0)
-        m.generated = sum(status_counts.values())
         # newly discovered URLs: linked targets not present in the (touched
         # part of the) frontier.  Counted as |linked| − |frontier ∩ linked|
-        # with a broadcast semi join so the frontier side never shuffles —
-        # the former small-ANTI-big join planned a sort-merge that moved
-        # every frontier url through an exchange in full-rewrite cycles
-        # (guide §3.2 semi-join discipline; same value by set identity).
-        linked_urls = (
-            po_raw.filter(F.col("status") == int(Msg.LINKED))
-            .select("url").distinct().persist()
-        )
+        # with the linked side broadcast so the frontier side never
+        # shuffles (guide §3.2; same value by set identity while frontier
+        # urls are unique — tests pin that).  The same pass
+        # counts the frontier rows it read, for the incremental
+        # frontier_size.  |linked| is a DISTINCT count, which observe
+        # rejects: it stays an action of its own.
+        linked_urls = (po_raw.filter(F.col("status") == int(Msg.LINKED))
+                       .select("url").distinct())
         n_linked = linked_urls.count()
-        n_present = (
+        old = (
             frontier.select("url")
-            .join(F.broadcast(linked_urls), "url", "left_semi")
-            .count()
+            .join(F.broadcast(linked_urls.withColumn("_l", F.lit(1))),
+                  "url", "left")
+            .agg(F.count(F.lit(1)).alias("rows"),
+                 F.count("_l").alias("present"))
+            .first()
         )
-        m.new_links = n_linked - n_present
-        linked_urls.unpersist()
-        tick("metrics")  # lineage pass + new-link discovery count
-        label("url_seen_refresh")
-
-        new_frontier = new_frontier.persist()
+        m.new_links = n_linked - old["present"]
+        tick("updatedb")  # updatedb + dedup + new-link count
 
         # URL-seen shard refresh BEFORE the frontier commit: with
         # additions allowed the key-set grows this cycle, and the shards
         # must never go stale relative to a committed snapshot (see
-        # _refresh_seen_blooms on crash ordering).  Built from the
-        # persisted next-frontier rows — touched buckets only in merge
-        # mode.
+        # _refresh_seen_blooms on crash ordering).  Built from cut 4 —
+        # touched buckets only in merge mode.
         if cfg.use_url_seen and cfg.additions_allowed \
                 and os.path.exists(self._blooms_path):
+            label("url_seen_refresh")
             self._refresh_seen_blooms(
                 touched if use_merge else None,
                 frontier_df=self._with_bucket(new_frontier),
             )
-            tick("url_seen_refresh")  # also materializes new_frontier
+            tick("url_seen_refresh")
         label("frontier_commit")
 
         meta = {k: v for k, v in m.as_dict().items() if k != "per_partition"}
         if use_merge:
             # incremental frontier_size: parent size − touched-bucket rows
-            # before + touched-bucket rows after.  Both counts are
-            # partition-pruned to the touched buckets — no full-frontier
-            # job in a merge cycle (the fallback full count only runs for
-            # pre-metric legacy snapshots, and is counted for tests).
+            # before + touched-bucket rows after, both counted on passes
+            # that run anyway — no full-frontier job in a merge cycle (the
+            # fallback full count only runs for pre-metric legacy
+            # snapshots, and is counted for tests).
             parent_size = self._frontier_size()
-            label("commit:new_count")
-            new_touched_rows = new_frontier.count()
             if parent_size is not None:
-                label("commit:old_count")
-                old_touched_rows = frontier.count()
-                m.frontier_size = (
-                    int(parent_size) - old_touched_rows + new_touched_rows
-                )
+                m.frontier_size = (int(parent_size) - old["rows"]
+                                   + cuts.observed["next_rows"])
             meta["frontier_size"] = m.frontier_size
-            label("commit:merge_write")
             self.frontier.merge_write(
                 self._with_bucket(new_frontier), touched, cycle_id=cycle_id,
                 metrics=meta, lineage=m.per_partition,
@@ -643,15 +679,14 @@ class CrawlDriver:
                 hist["snapshots"][-1]["metrics"]["frontier_size"] = m.frontier_size
                 self.frontier._commit(hist)
         else:
-            m.frontier_size = new_frontier.count()
+            m.frontier_size = cuts.observed["next_rows"]
             meta["frontier_size"] = m.frontier_size
             self._write_frontier(
                 new_frontier, cycle_id=cycle_id,
                 metrics=meta, lineage=m.per_partition,
             )
-        tick("frontier_commit")  # updatedb/dedup execute here if not above
+        tick("frontier_commit")
         label("linkdb")
-        new_frontier.unpersist()
 
         # ancillary tables (optional steps in the reference loop)
         self._update_linkdb(po_raw, cycle_id, use_merge)
@@ -665,14 +700,8 @@ class CrawlDriver:
         if self.analyze:
             self._analyze_segment(cycle_id, log)
             tick("analyze")
-        if use_merge:
-            po_raw.unpersist()
-        if seen_new is not None:
-            seen_new.unpersist()
-        for c in upd_cache:  # broadcast-delta caches die with the cycle
-            c.unpersist()
-        for c in parse_cache:
-            c.unpersist()
+        # every checkpoint and cache this cycle made dies with it
+        cuts.release()
 
         with open(self._cycle_state_path(cycle_id), "w") as f:
             json.dump(m.as_dict(), f, indent=1)

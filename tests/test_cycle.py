@@ -692,3 +692,159 @@ def test_segment_index_docs_plan(spark):
         assert docs.filter("image_id is null").count() == 0
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_outlinks_extracted_once_per_page(spark, tmp_path, monkeypatch):
+    """Each fetched page's outlinks are extracted once per cycle: the
+    parse output and the URL-seen probe result are materialized once, so
+    the probe, updatedb, the new-link count and linkdb never re-run the
+    pandas extract stage.  The extractor marks every page url it sees on
+    a marker file and records any repeat."""
+    import hashlib
+    import os as _os
+
+    marks, repeats = tmp_path / "marks", tmp_path / "repeats"
+    marks.mkdir()
+    repeats.mkdir()
+    marks, repeats = str(marks), str(repeats)
+    orig = world.outlinks_for
+
+    def marking(urls, *a, **kw):
+        for u in urls:
+            name = hashlib.md5(u.encode()).hexdigest()
+            if _os.path.exists(_os.path.join(marks, name)):
+                open(_os.path.join(repeats, name), "w").close()
+            else:
+                open(_os.path.join(marks, name), "w").close()
+        return orig(urls, *a, **kw)
+
+    monkeypatch.setattr(world, "outlinks_for", marking)
+    d = CrawlDriver(spark, str(tmp_path / "crawl"),
+                    CFG.with_(use_url_seen=True, additions_allowed=True),
+                    bucketed=True, **FETCH_KW)
+    d.inject(seeds_df(spark), T0)
+    m = d.run_cycle(0, T0 + 1000)
+    assert d.frontier.history()[-1].get("merge") is not None
+    assert m.fetched > 0 and len(_os.listdir(marks)) == m.fetched
+    assert not _os.listdir(repeats), \
+        f"{len(_os.listdir(repeats))} pages had their outlinks extracted twice"
+
+
+def test_cycle_frees_what_it_materializes(spark, tmp_path, monkeypatch):
+    """Every checkpoint and cache a cycle makes is released by its end:
+    after each of three bucketed URL-seen cycles Spark's storage holds no
+    more RDDs than after the first, and that one holds at most the live
+    URL-seen shard frame (a shard refresh must free the old one).  The
+    test keeps a reference to every frame the cycle checkpoints or
+    persists, so only the cycle itself, not a garbage collection, can
+    free their blocks."""
+    from pyspark.sql import DataFrame
+
+    kept: list = []
+    for name in ("localCheckpoint", "persist"):
+        orig = getattr(DataFrame, name)
+
+        def keeping(self, *a, _orig=orig, **kw):
+            out = _orig(self, *a, **kw)
+            kept.append(out)
+            return out
+
+        monkeypatch.setattr(DataFrame, name, keeping)
+
+    def held() -> int:
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+    d = CrawlDriver(spark, str(tmp_path / "crawl"),
+                    CFG.with_(use_url_seen=True), bucketed=True, **FETCH_KW)
+    d.inject(seeds_df(spark), T0)
+    base = held()
+    after = []
+    for k in range(3):
+        d.run_cycle(k, T0 + 1000 + k * 3_600_000)
+        after.append(held())
+    assert after[0] <= base + 1, (base, after)
+    assert max(after) <= after[0], (base, after)
+
+
+def _recount(spark, d, k: int, pre_urls: set) -> tuple[dict, set]:
+    """The CycleMetrics counters of cycle ``k`` recomputed from its
+    committed segment and frontier (``pre_urls``: the frontier's urls
+    before the cycle), and the cycle's linked urls."""
+    from pyspark.sql import functions as F
+
+    from coherencebot_spark.operators.parse import parse, redirect_link_rows
+    from coherencebot_spark.status import Fetch, Msg
+
+    log = d.fetch_log.read(spark, d.fetch_log.snapshot_for_cycle(k)["id"])
+    content = d.content.read(spark, d.content.snapshot_for_cycle(k)["id"])
+    st = {r["status"]: r["count"]
+          for r in log.groupBy("status").count().collect()}
+    cache: list = []
+    linked = {r.url for r in parse(log, content, d.cfg, cache=cache)
+              .unionByName(redirect_link_rows(log))
+              .filter(F.col("status") == int(Msg.LINKED))
+              .select("url").collect()}
+    for c in cache:
+        c.unpersist()
+    snap = d.frontier.snapshot_for_cycle(k)
+    return dict(
+        generated=sum(st.values()),
+        fetched=st.get(int(Fetch.SUCCESS), 0),
+        redirected=(st.get(int(Fetch.REDIR_TEMP), 0)
+                    + st.get(int(Fetch.REDIR_PERM), 0)),
+        gone=st.get(int(Fetch.GONE), 0),
+        retry=st.get(int(Fetch.RETRY), 0),
+        notmodified=st.get(int(Fetch.NOTMODIFIED), 0),
+        new_links=len(linked - pre_urls),
+        frontier_size=d.frontier.read(spark, snap["id"]).count(),
+    ), linked
+
+
+def test_cycle_metrics_match_independent_recounts(spark, tmp_path):
+    """Every CycleMetrics counter of a merge cycle and of a full-rewrite
+    cycle equals a count recomputed from the committed segment and
+    frontier.  ``new_links`` is |linked| − |frontier rows ∩ linked|, so it
+    relies on frontier urls being unique: a planted duplicate of a url
+    the cycle links to makes its check fail by exactly that row."""
+    from urllib.parse import urlsplit
+
+    from pyspark.sql import functions as F
+
+    def run(sub: str, plant: str | None = None):
+        d = CrawlDriver(spark, str(tmp_path / sub), CFG, bucketed=True,
+                        full_rewrite_every=2, **FETCH_KW)
+        d.inject(seeds_df(spark), T0)
+        out = []
+        for k in range(2):
+            if k == 1 and plant is not None:
+                # the linked url, twice, not due this cycle
+                f = d.frontier.read(spark).drop("bucket")
+                row = (f.limit(1)
+                       .withColumn("url", F.lit(plant))
+                       .withColumn("host", F.lit(urlsplit(plant).hostname))
+                       .withColumn("fetch_time", F.lit(T0 * 2)))
+                d._write_frontier(f.unionByName(row).unionByName(row),
+                                  cycle_id="dup",
+                                  metrics={"frontier_size": f.count() + 2})
+            pre_urls = {r.url for r in
+                        d.frontier.read(spark).select("url").collect()}
+            m = d.run_cycle(k, T0 + 1000 + k * 3_600_000)
+            want, linked = _recount(spark, d, k, pre_urls)
+            out.append((m, want, linked, pre_urls))
+        return d, out
+
+    d, clean = run("clean")
+    hist = [s for s in d.frontier.history() if isinstance(s["cycle_id"], int)]
+    assert hist[0].get("merge") is not None and hist[1].get("merge") is None
+    for m, want, _, _ in clean:
+        assert {k: getattr(m, k) for k in want} == want, m.cycle_id
+        assert m.generated > 0 and m.fetched > 0 and m.new_links > 0
+
+    # plant a url that cycle 1 discovers, as two frontier rows
+    _, _, linked1, pre1 = clean[1]
+    plant = sorted(linked1 - pre1)[0]
+    _, dup = run("dup", plant)
+    m, want, linked, pre_urls = dup[1]
+    assert plant in linked and plant in pre_urls
+    got = {k: getattr(m, k) for k in want}
+    assert got["new_links"] == want["new_links"] - 1, (got, want)
